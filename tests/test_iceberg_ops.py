@@ -423,3 +423,26 @@ def test_mor_position_delete_and_materialize(spark, tmp_path):
 
     with pytest.raises(ValueError, match="copy-on-write.merge-on-read"):
         delete_iceberg(spark, root, "id = 1", mode="nope")
+
+
+def test_cow_cycles_keep_manifest_list_bounded(spark, tmp_path):
+    """Append + copy-on-write delete cycles: a carried manifest whose
+    entries are all DELETED drops out of the next list, so the manifest
+    count stays bounded; every read matches the model and time travel
+    to an early snapshot still returns its rows."""
+    from tidierdb_jl_spark.sources.iceberg_ops import manifests_iceberg
+
+    root = str(tmp_path / "tbl")
+    write_iceberg(_tf(spark, [(i, "v", "en") for i in range(20)]), root)
+    first = snapshots_iceberg(spark, root)[-1]["snapshot_id"]
+    lo, hi, counts = 0, 20, []
+    for _cycle in range(20):
+        write_iceberg(_tf(spark, [(i, "v", "en") for i in range(hi, hi + 5)]),
+                      root, mode="append")
+        hi += 5
+        delete_iceberg(spark, root, f"id < {lo + 5}")
+        lo += 5
+        assert _ids(spark, root) == list(range(lo, hi))
+        counts.append(len(manifests_iceberg(spark, root)))
+    assert max(counts) <= 6, counts
+    assert _ids(spark, root, snapshot_id=first) == list(range(20))

@@ -5,7 +5,9 @@ Defaults are tuned for the test container (local[N]) but every knob is the
 one that matters on a real cluster too: AQE on (runtime re-plan, skew-join
 handling, partition coalescing), shuffle partitions sized to parallelism,
 UTC session timezone (oracle parity), Arrow transfers for the Python
-boundary.
+boundary.  Unless given (argument, then ``SPARK_GRAFT_CPUS`` /
+``SPARK_DRIVER_MEM``), the core count is the CPUs this process may run on
+and the driver heap half the host's memory, capped at 16g.
 """
 
 from __future__ import annotations
@@ -37,6 +39,39 @@ TESTDATA_TABLES = (
 )
 
 
+_MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def _default_cpus(affinity=None) -> int:
+    """Default ``local[N]``: the CPUs this process may run on (its
+    affinity mask, read when ``affinity`` is None — a container pinned
+    to 4 of 64 cores gets 4)."""
+    if affinity is None:
+        try:
+            affinity = os.sched_getaffinity(0)
+        except AttributeError:  # no affinity API on this platform
+            return os.cpu_count() or 1
+    return max(1, len(affinity))
+
+
+def _default_driver_memory(meminfo: str | None = None) -> str:
+    """Default driver heap: half of ``MemTotal`` from ``meminfo`` (the
+    text of ``/proc/meminfo``, read when None), capped at 16g; the cap
+    when ``MemTotal`` is unknown."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                meminfo = fh.read()
+        except OSError:
+            meminfo = ""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            mb = int(line.split()[1]) // 2048  # kB -> MB, halved
+            if mb < _MAX_DRIVER_MEM_MB:
+                return f"{mb}m"
+    return f"{_MAX_DRIVER_MEM_MB // 1024}g"
+
+
 def get_spark(
     app: str = "tidierdb-jl-spark",
     cpus: int | str | None = None,
@@ -44,7 +79,7 @@ def get_spark(
     driver_memory: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus()
     # Keep JVM side-effect files (spark-warehouse/, Derby's derby.log) out
     # of the process cwd — saveAsTable output and the embedded-Derby JDBC
     # tests otherwise litter the repo root.
@@ -58,7 +93,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory
+                or os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable;

@@ -417,8 +417,9 @@ def _deleted_rows_df(spark, root: str, dv_of: dict[str, dict]):
         import pandas as pd
 
         from tidierdb_jl_spark.sources.dvectors import (
-            decode_dv_blob, read_dv_from_bytes, read_file_bytes, z85_decode,
+            decode_dv_blob, read_dv_from_bytes, z85_decode,
         )
+        from tidierdb_jl_spark.sources.fsio import read_bytes
 
         for pdf in batches:
             for r in pdf.itertuples(index=False):
@@ -428,7 +429,7 @@ def _deleted_rows_df(spark, root: str, dv_of: dict[str, dict]):
                     data = z85_decode(r.inline)[:int(r.size)]
                     idx = decode_dv_blob(data, int(r.card))
                 else:
-                    blob = read_file_bytes(r.url)
+                    blob = read_bytes(r.url)
                     idx = read_dv_from_bytes(
                         blob, int(r.off), int(r.size), int(r.card)
                     )

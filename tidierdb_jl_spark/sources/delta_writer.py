@@ -1012,8 +1012,9 @@ def _encode_dv_sidecar(spark, root: str, matched, live) -> dict:
 
         from tidierdb_jl_spark.sources.dvectors import (
             dv_file_relpath, encode_roaring_array, read_dv_from_bytes,
-            read_file_bytes, z85_decode,
+            z85_decode,
         )
+        from tidierdb_jl_spark.sources.fsio import read_bytes
 
         b = key[0]
         idx = np.unique(pdf["__mor_ridx"].to_numpy(dtype="int64"))
@@ -1033,7 +1034,7 @@ def _encode_dv_sidecar(spark, root: str, matched, live) -> dict:
                 url = (d["pathOrInlineDv"] if st == "p" else
                        f"{root_b}/{dv_file_relpath(d['pathOrInlineDv'])}")
                 old = read_dv_from_bytes(
-                    read_file_bytes(url), int(d.get("offset") or 1),
+                    read_bytes(url), int(d.get("offset") or 1),
                     int(d["sizeInBytes"]), d.get("cardinality"))
             idx = np.union1d(idx, old.astype("int64"))
         blob = encode_roaring_array(idx)

@@ -44,7 +44,6 @@ __all__ = [
     "dv_file_relpath",
     "read_dv_from_bytes",
     "read_iceberg_dv_from_bytes",
-    "read_file_bytes",
 ]
 
 # Iceberg v3 deletion-vector blob magic (spec "Deletion vectors": the
@@ -301,27 +300,6 @@ def dv_file_relpath(path_or_inline: str) -> str:
     u = _uuid.UUID(bytes=raw)
     name = f"deletion_vector_{u}.bin"
     return f"{prefix}/{name}" if prefix else name
-
-
-def read_file_bytes(url: str) -> bytes:
-    """Whole-file bytes, EXECUTOR-side (no SparkSession): plain ``open``
-    for local paths / ``file://``, ``pyarrow.fs`` for any other scheme
-    (``s3://``, ``hdfs://``, ``gs://``) — DV sidecars are small (a
-    bitmap of deleted indexes), so a whole-file read is the right unit."""
-    if "://" not in url:
-        with open(url, "rb") as fh:
-            return fh.read()
-    if url.startswith("file://"):
-        with open(url[len("file://"):], "rb") as fh:
-            return fh.read()
-    from pyarrow import fs as pafs
-
-    # s3a:// is Hadoop's spelling of s3:// — pyarrow only knows the latter
-    if url.startswith("s3a://"):
-        url = "s3://" + url[len("s3a://"):]
-    filesystem, path = pafs.FileSystem.from_uri(url)
-    with filesystem.open_input_file(path) as fh:
-        return fh.read()
 
 
 def read_iceberg_dv_from_bytes(

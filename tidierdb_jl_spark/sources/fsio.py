@@ -14,8 +14,13 @@ through ``Path.getFileSystem(hadoopConf)``, so a plain ``/tmp/state``,
 a ``file:///`` URI, ``hdfs://`` and ``s3a://`` all behave the same
 (given the scheme's connector jars on the classpath).
 
-All helpers are DRIVER-side and metadata-sized (a JSON file, a rename)
-— never row data.  Row data stays in Spark jobs.
+All Hadoop helpers are DRIVER-side and metadata-sized (a JSON file, a
+rename) — never row data.  Row data stays in Spark jobs.  The Arrow
+helpers, :func:`arrow_fs`, :func:`read_bytes` and :func:`list_names`,
+are their EXECUTOR-safe counterparts for Python workers, which hold no JVM
+handle: footer probes, data-file writes, deletion-vector reads and the
+streaming sources' pure-Python IO.  This module imports nothing from
+Spark at module level, so workers can import it.
 
 Atomicity contract (documented, scheme-dependent):
 
@@ -42,6 +47,9 @@ from __future__ import annotations
 __all__ = [
     "join_path",
     "hadoop_fs",
+    "arrow_fs",
+    "read_bytes",
+    "list_names",
     "fs_exists",
     "fs_mkdirs",
     "fs_delete",
@@ -72,6 +80,43 @@ def hadoop_fs(spark, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(str(path))
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def arrow_fs(url: str):
+    """(pyarrow FileSystem, path) for ``url``, usable without a JVM:
+    local paths and ``file://`` URIs get the local filesystem, any
+    other scheme ``pyarrow.fs.FileSystem.from_uri`` — with Hadoop's
+    ``s3a://`` spelled ``s3://``, the only S3 scheme pyarrow knows."""
+    from pyarrow import fs as pafs
+
+    url = str(url)
+    if "://" not in url:
+        return pafs.LocalFileSystem(), url
+    if url.startswith("file://"):
+        return pafs.LocalFileSystem(), url[len("file://"):]
+    if url.startswith("s3a://"):
+        url = "s3://" + url[len("s3a://"):]
+    return pafs.FileSystem.from_uri(url)
+
+
+def read_bytes(url: str) -> bytes:
+    """Whole-file bytes through :func:`arrow_fs` — for small files
+    (commit logs, manifests, deletion-vector sidecars)."""
+    filesystem, pth = arrow_fs(url)
+    with filesystem.open_input_stream(pth) as fh:
+        return fh.read()
+
+
+def list_names(url: str) -> list[str] | None:
+    """Basenames directly under directory ``url`` through
+    :func:`arrow_fs`, or None when ``url`` is not a directory."""
+    from pyarrow import fs as pafs
+
+    filesystem, pth = arrow_fs(url)
+    if filesystem.get_file_info(pth).type != pafs.FileType.Directory:
+        return None
+    return [fi.base_name
+            for fi in filesystem.get_file_info(pafs.FileSelector(pth))]
 
 
 def fs_exists(spark, path: str) -> bool:

@@ -34,10 +34,9 @@ smaller data sequence number, so re-inserts after the delete survive)
 — see :func:`_apply_equality_deletes`.  Format version 3 is therefore
 readable, including v3 COLUMN DEFAULTS (r11): a field's
 ``initial-default`` fills rows from data files that predate the field —
-per-file presence probed from the parquet footers in one distributed
-metadata job — while files containing the field keep stored values,
-genuine nulls included (:func:`_scan_with_defaults`).  Unknown types
-fail in the parquet reader rather than silently.
+per-file presence read from the data-file footers — while files
+containing the field keep stored values, genuine nulls included.
+Unknown types fail in the parquet reader rather than silently.
 
 Column resolution (r11): parquet live sets resolve columns BY FIELD ID
 from each file's footer (``PARQUET:field_id`` — what real Iceberg
@@ -45,6 +44,12 @@ writers emit), so renames and even name swaps project correctly;
 no-id files (imported plain parquet) fall back to name matching; a
 field absent from a file fills its v3 ``initial-default``, else NULL
 when optional (spec "Column Projection") — see :func:`_resolved_scan`.
+Data files are immutable, so each file's footer is probed at most once
+per process: a module-level memo keyed by path and manifest file size
+(LRU, at most ``_FOOTER_MEMO_MAX`` = 100,000 files) answers repeat
+reads, and the writer seeds it with every file it writes, so a table
+this engine wrote is never probed; only files the memo lacks go to the
+distributed probe job.
 
 Loud gates (wrong-rows risks refuse, never guess): format version > 3;
 unresolvable sequence numbers when equality deletes are present;
@@ -63,12 +68,48 @@ own zigzag vectors — the repo's codec-test strategy.
 from __future__ import annotations
 
 import json
+import threading
+from collections import OrderedDict
 
 from ..core import TidyFrame
 from .avro_lite import read_avro_file
 from .fsio import fs_exists, hadoop_fs, join_path, read_text
 
 __all__ = ["read_iceberg"]
+
+# Footer memo: (resolved data-file path, file_size_in_bytes) -> the
+# file's top-level ((name, field id), ...).  Data files are immutable —
+# the spec forbids rewriting one in place, and the size in the key
+# catches a foreign tool that does it anyway — so an entry never goes
+# stale; the bound is LRU so a long-running streaming sink cannot grow
+# it without limit (about 100 bytes a file: files of one table share
+# one field tuple).
+_FOOTER_MEMO_MAX = 100_000
+_footer_memo: OrderedDict = OrderedDict()
+_footer_lock = threading.Lock()
+
+
+def _memo_footers(items) -> None:
+    """Record ``((path, size), fields)`` pairs in the footer memo — the
+    writer seeds it with every data file it writes."""
+    with _footer_lock:
+        for key, fields in items:
+            _footer_memo[key] = fields
+            _footer_memo.move_to_end(key)
+        while len(_footer_memo) > _FOOTER_MEMO_MAX:
+            _footer_memo.popitem(last=False)
+
+
+def _memo_lookup(keys) -> dict:
+    """{key: fields} for the memoized subset of ``keys``."""
+    out = {}
+    with _footer_lock:
+        for key in keys:
+            fields = _footer_memo.get(key)
+            if fields is not None:
+                _footer_memo.move_to_end(key)
+                out[key] = fields
+    return out
 
 
 def _latest_metadata(spark, path: str) -> str:
@@ -221,6 +262,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     # the exclusion is global, not per-manifest
     added, deleted, fmts = {}, set(), set()
     parts_of: dict[str, dict] = {}
+    sizes: dict[str, int | None] = {}
     for mp, mseq in manifests:
         for entry in read_avro_file(spark, _resolve_path(path, mp)):
             df_ = entry["data_file"]
@@ -238,6 +280,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
             fmts.add(str(df_.get("file_format", "PARQUET")).upper())
             added[fp] = _entry_seq(entry, mseq, status)
             parts_of[fp] = dict(df_.get("partition") or {})
+            sizes[fp] = df_.get("file_size_in_bytes")
     pos_deletes, dv_deletes, eq_deletes = _delete_files(
         spark, path, delete_manifests
     )
@@ -289,7 +332,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         df = _resolved_scan(spark, path, sorted(live), want_fields,
                             keep_metadata=bool(pos_deletes or dv_deletes
                                                or _ridx_col),
-                            ident_fill=ident_fill)
+                            ident_fill=ident_fill, sizes=sizes)
     else:
         # ORC live sets (r12): the SAME spec-exact field-id resolution
         # as parquet — ids come from the ORC iceberg.id type attributes
@@ -299,7 +342,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         df = _resolved_scan(spark, path, sorted(live), want_fields,
                             keep_metadata=bool(pos_deletes or dv_deletes
                                                or _ridx_col),
-                            fmt="orc", ident_fill=ident_fill)
+                            fmt="orc", ident_fill=ident_fill, sizes=sizes)
     if _ridx_col:
         df = df.withColumn(_ridx_col, F.col("_metadata.row_index"))
     if _file_col:
@@ -518,12 +561,13 @@ def _dv_rows_df(spark, dv_deletes):
         import pandas as pd
 
         from tidierdb_jl_spark.sources.dvectors import (
-            read_file_bytes, read_iceberg_dv_from_bytes,
+            read_iceberg_dv_from_bytes,
         )
+        from tidierdb_jl_spark.sources.fsio import read_bytes
 
         for pdf in batches:
             for r in pdf.itertuples(index=False):
-                blob = read_file_bytes(r.url)
+                blob = read_bytes(r.url)
                 idx = read_iceberg_dv_from_bytes(
                     blob, int(r.off),
                     None if pd.isna(r.size) else int(r.size),
@@ -659,43 +703,10 @@ def _iceberg_spark_type(path: str, f: dict) -> str:
     )
 
 
-def _resolved_scan(spark, path: str, files: list, fields: list,
-                   keep_metadata: bool = False, fmt: str = "parquet",
-                   ident_fill: dict | None = None):
-    """Spec-exact column resolution (Iceberg spec "Column Projection" +
-    v3 "Default values"), replacing name matching:
-
-    - Each live file's footer is probed ONCE in a distributed metadata
-      job (batched tasks — O(files) driver footprint, same as the live
-      list itself; never row data): top-level ``(name, field id)``
-      pairs.  Parquet ids come from the ``PARQUET:field_id`` schema
-      metadata (pyarrow footer read); ORC ids (r12) from the
-      ``iceberg.id`` type attributes via the in-repo ORC tail parser
-      (:mod:`.orc_meta` — pyarrow's ORC reader does not expose type
-      attributes).
-    - A current-schema field resolves in a file BY FIELD ID when the
-      file carries ids (what real Iceberg writers emit) — renames and
-      even name SWAPS resolve correctly, the failure mode pure name
-      matching silently gets wrong.  Files with no ids at all (imported
-      plain parquet) fall back to name matching.
-    - A field ABSENT from a file fills its ``initial-default`` (v3),
-      else NULL when optional (spec: missing field id ⇒ default or
-      null), else refuses (required, no default).  Files that contain
-      the field keep stored values, INCLUDING genuine nulls — the
-      per-file distinction a plain union-schema read erases.
-    - In a no-id file a missing NAME with no default still refuses: it
-      could be a rename, and without ids the two cases are
-      indistinguishable.
-
-    Files are grouped by their full resolution signature, each group
-    scanned once (physical→logical aliases + typed fill literals), and
-    the groups unioned by name.  With ``keep_metadata`` the hidden
-    ``_metadata`` struct is retained explicitly so the row-level delete
-    machinery keeps its ``row_index`` access across the union; without
-    deletes it is omitted, keeping the pushed ReadSchema exactly the
-    projected columns."""
-    from pyspark.sql import functions as F
-
+def _probe_footers(spark, files: list, fmt: str) -> dict:
+    """{path: ((name, field id), ...)} read from the footers of
+    ``files`` in one distributed metadata job; files with equal field
+    lists share one tuple."""
     fdf = spark.createDataFrame([(f,) for f in files], "path string")
     if len(files) > 1:
         fdf = fdf.repartition(min(len(files), 64))
@@ -706,17 +717,11 @@ def _resolved_scan(spark, path: str, files: list, fields: list,
         def topfields_parquet(p):
             import pyarrow.parquet as pq
 
-            if "://" not in p or p.startswith("file://"):
-                lp = p[len("file://"):] if p.startswith("file://") else p
-                sch = pq.read_schema(lp)
-            else:
-                from pyarrow import fs as pafs
+            from tidierdb_jl_spark.sources.fsio import arrow_fs
 
-                if p.startswith("s3a://"):
-                    p = "s3://" + p[len("s3a://"):]
-                filesystem, pth = pafs.FileSystem.from_uri(p)
-                with filesystem.open_input_file(pth) as fh:
-                    sch = pq.read_schema(fh)
+            filesystem, pth = arrow_fs(p)
+            with filesystem.open_input_file(pth) as fh:
+                sch = pq.read_schema(fh)
             out = []
             for fld in sch:
                 fid = None
@@ -743,11 +748,66 @@ def _resolved_scan(spark, path: str, files: list, fields: list,
                 "fields": [json.dumps(topfields(p)) for p in pdf["path"]],
             })
 
-    footer = {
-        r["path"]: [(n, fid) for n, fid in json.loads(r["fields"])]
-        for r in fdf.mapInPandas(probe, "path string, fields string")
-        .collect()
-    }
+    shared: dict[tuple, tuple] = {}
+    out = {}
+    for r in fdf.mapInPandas(probe, "path string, fields string").collect():
+        fl = tuple((n, fid) for n, fid in json.loads(r["fields"]))
+        out[r["path"]] = shared.setdefault(fl, fl)
+    return out
+
+
+def _resolved_scan(spark, path: str, files: list, fields: list,
+                   keep_metadata: bool = False, fmt: str = "parquet",
+                   ident_fill: dict | None = None,
+                   sizes: dict | None = None):
+    """Spec-exact column resolution (Iceberg spec "Column Projection" +
+    v3 "Default values"), replacing name matching:
+
+    - Each live file's top-level ``(name, field id)`` pairs come from
+      its footer, read ONCE per immutable file per process: the
+      module's footer memo, keyed by path and the manifest's
+      ``file_size_in_bytes`` (``sizes``), answers for every file this
+      engine wrote (the writer seeds it) or has probed before, and a
+      distributed metadata job (batched tasks — O(files) driver
+      footprint; never row data) probes only the rest — no job at all
+      when nothing is missing.  The memo holds at most
+      ``_FOOTER_MEMO_MAX`` files, least recently used out first; a
+      file whose manifest entry has no size is always probed.
+      Parquet ids come from the ``PARQUET:field_id`` schema metadata
+      (pyarrow footer read); ORC ids (r12) from the ``iceberg.id``
+      type attributes via the in-repo ORC tail parser (:mod:`.orc_meta`
+      — pyarrow's ORC reader does not expose type attributes).
+    - A current-schema field resolves in a file BY FIELD ID when the
+      file carries ids (what real Iceberg writers emit) — renames and
+      even name SWAPS resolve correctly, the failure mode pure name
+      matching silently gets wrong.  Files with no ids at all (imported
+      plain parquet) fall back to name matching.
+    - A field ABSENT from a file fills its ``initial-default`` (v3),
+      else NULL when optional (spec: missing field id ⇒ default or
+      null), else refuses (required, no default).  Files that contain
+      the field keep stored values, INCLUDING genuine nulls — the
+      per-file distinction a plain union-schema read erases.
+    - In a no-id file a missing NAME with no default still refuses: it
+      could be a rename, and without ids the two cases are
+      indistinguishable.
+
+    Files are grouped by their full resolution signature, each group
+    scanned once (physical→logical aliases + typed fill literals), and
+    the groups unioned by name.  With ``keep_metadata`` the hidden
+    ``_metadata`` struct is retained explicitly so the row-level delete
+    machinery keeps its ``row_index`` access across the union; without
+    deletes it is omitted, keeping the pushed ReadSchema exactly the
+    projected columns."""
+    from pyspark.sql import functions as F
+
+    keys = {p: (p, (sizes or {}).get(p)) for p in files}
+    known = _memo_lookup(k for k in keys.values() if k[1] is not None)
+    footer = {p: known[k] for p, k in keys.items() if k in known}
+    missing = [p for p in files if p not in footer]
+    if missing:
+        footer.update(_probe_footers(spark, missing, fmt))
+        _memo_footers((keys[p], footer[p]) for p in missing
+                      if keys[p][1] is not None)
 
     def resolve(p: str) -> tuple:
         """Per-file signature: one entry per current-schema field —

@@ -25,7 +25,7 @@ How a copy-on-write commit works (Iceberg spec "Snapshots" +
    explicit data sequence numbers — inheritance resolved at rewrite
    time).  Untouched manifests are carried verbatim in the new
    manifest list, so metadata work scales with TOUCHED manifests, not
-   the table.  One new manifest lists the rewritten files.
+   the table; a carried manifest with no live entry left drops out.  One new manifest lists the rewritten files.
 4. **Commit** — a new snapshot + ``v<N>.metadata.json`` via the
    hadoop-catalog optimistic protocol (``create(overwrite=False)``;
    losers re-read and retry, verifying the touched files are still
@@ -310,6 +310,7 @@ def _commit_rewrite(spark, root: str, touched: set[str],
         kept = [e for _m, _p, entries in data_manifests
                 for e in entries
                 if e["status"] != 2 and e["path"] not in touched]
+        still_live = {e["path"] for e in kept}
         if any(e["seq"] is None for e in kept):
             min_live_seq = 0  # unknown seq: keep every delete manifest
         else:
@@ -323,8 +324,15 @@ def _commit_rewrite(spark, root: str, touched: set[str],
             live_entries = [e for e in entries if e["status"] != 2]
             hit = [e for e in live_entries if e["path"] in touched]
             if not hit:
-                list_entries.append(_carry_mlist_entry(
-                    m, mpath, snap_id))
+                # a manifest with no live entry only carries DELETED
+                # markers; it drops out unless a path it marks is still
+                # listed live by a kept manifest (the reader applies
+                # DELETED across all manifests), so the list does not
+                # grow by one manifest per copy-on-write cycle
+                if live_entries or any(e["path"] in still_live
+                                       for e in entries):
+                    list_entries.append(_carry_mlist_entry(
+                        m, mpath, snap_id))
                 continue
             kept = [e for e in live_entries if e["path"] not in touched]
             recs = []
@@ -1170,25 +1178,15 @@ def convert_to_iceberg(spark, path: str) -> int:
     def probe(batches):
         import pyarrow.parquet as pq
 
+        from tidierdb_jl_spark.sources.fsio import arrow_fs
+
         for pdf in batches:
             rows = []
             for p in pdf["path"]:
-                if "://" not in p or p.startswith("file://"):
-                    lp = (p[len("file://"):] if p.startswith("file://")
-                          else p)
-                    md = pq.read_metadata(lp)
-                    import os as _os
-
-                    size = _os.path.getsize(lp)
-                else:
-                    from pyarrow import fs as pafs
-
-                    u = ("s3://" + p[len("s3a://"):]
-                         if p.startswith("s3a://") else p)
-                    filesystem, pth = pafs.FileSystem.from_uri(u)
-                    with filesystem.open_input_file(pth) as fh:
-                        md = pq.read_metadata(fh)
-                    size = filesystem.get_file_info(pth).size
+                filesystem, pth = arrow_fs(p)
+                with filesystem.open_input_file(pth) as fh:
+                    md = pq.read_metadata(fh)
+                    size = fh.size()
                 rows.append((p, int(md.num_rows), int(size)))
             yield _pd.DataFrame(rows, columns=["path", "n", "size"])
 

@@ -356,7 +356,9 @@ def _write_data_files(df, root: str, fields: list[dict],
     100 TB layout even for bucket transforms no JVM expression can
     compute.  Returns
     [(file_path, record_count, size, partition_values_json)] —
-    driver-resident manifest metadata, never row data."""
+    driver-resident manifest metadata, never row data.  Every written
+    file seeds the reader's footer memo (:mod:`.iceberg`) with the
+    stamped top-level fields, so reading it back probes no footer."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -400,6 +402,9 @@ def _write_data_files(df, root: str, fields: list[dict],
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
+
+        from tidierdb_jl_spark.sources.fsio import arrow_fs
 
         pdfs = [b for b in batches if len(b)]
         if not pdfs:
@@ -434,28 +439,25 @@ def _write_data_files(df, root: str, fields: list[dict],
                           for k, v in pv.items())
             rel = f"data/{seg}{uuid.uuid4().hex}.parquet"
             url = f"{root}/{rel}"
-            if "://" not in url or url.startswith("file://"):
-                lp = (url[len("file://"):] if url.startswith("file://")
-                      else url)
-                import os
-
-                os.makedirs(os.path.dirname(lp), exist_ok=True)
-                pq.write_table(table, lp)
-                size = os.path.getsize(lp)
-            else:
-                from pyarrow import fs as pafs
-
-                u = ("s3://" + url[len("s3a://"):]
-                     if url.startswith("s3a://") else url)
-                filesystem, pth = pafs.FileSystem.from_uri(u)
-                with filesystem.open_output_stream(pth) as out:
-                    pq.write_table(table, out)
-                size = filesystem.get_file_info(pth).size
+            filesystem, pth = arrow_fs(url)
+            if isinstance(filesystem, pafs.LocalFileSystem):
+                # object stores have no directories to make
+                filesystem.create_dir(pth.rsplit("/", 1)[0],
+                                      recursive=True)
+            with filesystem.open_output_stream(pth) as out:
+                pq.write_table(table, out)
+            size = filesystem.get_file_info(pth).size
             out_rows.append((url, len(g), int(size), pv_key))
         yield pd.DataFrame(out_rows, columns=["path", "n", "size", "pv"])
 
+    from .iceberg import _memo_footers
+
     rows = df.mapInPandas(
         task, "path string, n long, size long, pv string").collect()
+    # the top-level (name, id) list every file carries — the same
+    # fields ``sch`` stamps, shared by all entries of this write
+    top = tuple((f["name"], int(f["id"])) for f in fields)
+    _memo_footers(((r["path"], int(r["size"])), top) for r in rows)
     return [(r["path"], int(r["n"]), int(r["size"]),
              json.loads(r["pv"])) for r in rows]
 

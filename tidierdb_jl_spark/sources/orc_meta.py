@@ -202,18 +202,11 @@ def orc_top_fields(fh) -> list[tuple[str, int | None]]:
 
 
 def orc_top_fields_from_url(url: str) -> list[tuple[str, int | None]]:
-    """Same, from a URL — local paths open directly; other schemes go
-    through pyarrow's filesystem (seekable input), exactly like the
-    parquet footer probe.  Runs executor-side in the distributed
-    probe."""
-    if "://" not in url or url.startswith("file://"):
-        lp = url[len("file://"):] if url.startswith("file://") else url
-        with open(lp, "rb") as fh:
-            return orc_top_fields(fh)
-    from pyarrow import fs as pafs
+    """Same, from a URL opened through :func:`.fsio.arrow_fs` (seekable
+    input), exactly like the parquet footer probe.  Runs executor-side
+    in the distributed probe."""
+    from .fsio import arrow_fs
 
-    if url.startswith("s3a://"):
-        url = "s3://" + url[len("s3a://"):]
-    filesystem, pth = pafs.FileSystem.from_uri(url)
+    filesystem, pth = arrow_fs(url)
     with filesystem.open_input_file(pth) as fh:
         return orc_top_fields(fh)

@@ -34,10 +34,10 @@ Semantics (matching delta-spark's streaming source):
   reconstructible (pass ``startingVersion`` explicitly, or start
   ``latest``).
 
-The log and data files are read with PURE-PYTHON IO (local paths /
-``file://`` directly, anything else through ``pyarrow.fs`` — the same
-dual path as the Iceberg writer's executor tasks), because DataSource
-hooks run in Python workers with no JVM handle.
+The log and data files are read with PURE-PYTHON IO through
+:func:`~..sources.fsio.arrow_fs` (the opener the Iceberg writer's
+executor tasks use too), because DataSource hooks run in Python workers
+with no JVM handle.
 
 Loud gates: protocol minReaderVersion > 1 features (column mapping,
 DVs) refuse at planning time rather than emit wrong rows.
@@ -46,8 +46,9 @@ DVs) refuse at planning time rather than emit wrong rows.
 from __future__ import annotations
 
 import json
-import os
 from urllib.parse import unquote
+
+from ..sources.fsio import arrow_fs, list_names, read_bytes
 
 __all__ = ["DeltaJarfreeDataSource", "register_delta_stream_source",
            "read_stream_delta_source"]
@@ -57,33 +58,12 @@ _FORMAT_NAME = "delta_jarfree"
 
 # ---- pure-python log access (no JVM in DataSource hooks) -------------
 
-def _open_bytes(url: str) -> bytes:
-    if "://" not in url or url.startswith("file://"):
-        lp = url[len("file://"):] if url.startswith("file://") else url
-        with open(lp, "rb") as fh:
-            return fh.read()
-    from pyarrow import fs as pafs
-
-    u = "s3://" + url[len("s3a://"):] if url.startswith("s3a://") else url
-    filesystem, pth = pafs.FileSystem.from_uri(u)
-    with filesystem.open_input_stream(pth) as fh:
-        return fh.read()
-
-
 def _list_log(root: str) -> list[str]:
     """Basenames under ``_delta_log/`` (pure python)."""
-    url = f"{root}/_delta_log"
-    if "://" not in url or url.startswith("file://"):
-        lp = url[len("file://"):] if url.startswith("file://") else url
-        if not os.path.isdir(lp):
-            raise ValueError(f"{root} is not a Delta table (no _delta_log/)")
-        return sorted(os.listdir(lp))
-    from pyarrow import fs as pafs
-
-    u = "s3://" + url[len("s3a://"):] if url.startswith("s3a://") else url
-    filesystem, pth = pafs.FileSystem.from_uri(u)
-    sel = pafs.FileSelector(pth, recursive=False)
-    return sorted(fi.base_name for fi in filesystem.get_file_info(sel))
+    names = list_names(f"{root}/_delta_log")
+    if names is None:
+        raise ValueError(f"{root} is not a Delta table (no _delta_log/)")
+    return sorted(names)
 
 
 def _log_versions(root: str) -> list[int]:
@@ -95,7 +75,7 @@ def _log_versions(root: str) -> list[int]:
 
 
 def _read_commit(root: str, version: int) -> list[dict]:
-    raw = _open_bytes(f"{root}/_delta_log/{version:020d}.json")
+    raw = read_bytes(f"{root}/_delta_log/{version:020d}.json")
     return [json.loads(line) for line in raw.decode("utf-8").splitlines()
             if line.strip()]
 
@@ -295,17 +275,8 @@ def _make_stream_reader(options):
                     return pa.decimal128(int(p), int(s))
                 raise NotImplementedError(
                     f"streaming source: column type {t!r}")
-            if "://" not in url or url.startswith("file://"):
-                lp = (url[len("file://"):] if url.startswith("file://")
-                      else url)
-                table = pq.read_table(lp)
-            else:
-                from pyarrow import fs as pafs
-
-                u = ("s3://" + url[len("s3a://"):]
-                     if url.startswith("s3a://") else url)
-                filesystem, pth = pafs.FileSystem.from_uri(u)
-                table = pq.read_table(pth, filesystem=filesystem)
+            filesystem, pth = arrow_fs(url)
+            table = pq.read_table(pth, filesystem=filesystem)
             n = table.num_rows
             cols = []
             for f in fields:

@@ -25,8 +25,8 @@ Semantics (matching the iceberg-spark streaming source):
   start.  Expired (no longer retained) snapshots inside the requested
   range refuse loudly — the add-set is no longer reconstructible.
 
-All metadata and data IO is PURE PYTHON (local / ``file://`` paths
-directly, anything else through ``pyarrow.fs``; Avro manifests through
+All metadata and data IO is PURE PYTHON (through
+:func:`~..sources.fsio.arrow_fs`; Avro manifests through
 the in-repo :func:`~..sources.avro_lite.decode_avro_container`),
 because DataSource hooks run in Python workers with no JVM handle.
 Source columns live IN Iceberg data files (identity and transformed
@@ -38,7 +38,8 @@ columns (a rename without ids is indistinguishable from a drop).
 from __future__ import annotations
 
 import json
-import os
+
+from ..sources.fsio import arrow_fs, list_names, read_bytes
 
 __all__ = ["register_iceberg_stream_source",
            "read_stream_iceberg_source"]
@@ -59,38 +60,14 @@ _ICE_TO_ARROW = {
 }
 
 
-def _open_bytes(url: str) -> bytes:
-    if "://" not in url or url.startswith("file://"):
-        lp = url[len("file://"):] if url.startswith("file://") else url
-        with open(lp, "rb") as fh:
-            return fh.read()
-    from pyarrow import fs as pafs
-
-    u = "s3://" + url[len("s3a://"):] if url.startswith("s3a://") else url
-    filesystem, pth = pafs.FileSystem.from_uri(u)
-    with filesystem.open_input_stream(pth) as fh:
-        return fh.read()
-
-
 def _latest_meta(root: str) -> dict:
     """Latest metadata json, pure-python (version-hint fast path, full
     listing fallback — same contract as the JVM reader's)."""
     mdir = f"{root}/metadata"
-    names: list[str]
-    if "://" not in mdir or mdir.startswith("file://"):
-        lp = mdir[len("file://"):] if mdir.startswith("file://") else mdir
-        if not os.path.isdir(lp):
-            raise ValueError(f"{root} is not an Iceberg table "
-                             "(no metadata/)")
-        names = os.listdir(lp)
-    else:
-        from pyarrow import fs as pafs
-
-        u = ("s3://" + mdir[len("s3a://"):] if mdir.startswith("s3a://")
-             else mdir)
-        filesystem, pth = pafs.FileSystem.from_uri(u)
-        names = [fi.base_name for fi in filesystem.get_file_info(
-            pafs.FileSelector(pth, recursive=False))]
+    names = list_names(mdir)
+    if names is None:
+        raise ValueError(f"{root} is not an Iceberg table "
+                         "(no metadata/)")
 
     def ver(n: str) -> int:
         head = n[: -len(".metadata.json")]
@@ -101,7 +78,7 @@ def _latest_meta(root: str) -> dict:
     if not cands:
         raise ValueError(f"{root}: no metadata.json files")
     best = max(cands, key=ver)
-    return json.loads(_open_bytes(f"{mdir}/{best}").decode("utf-8"))
+    return json.loads(read_bytes(f"{mdir}/{best}").decode("utf-8"))
 
 
 def _resolve(root: str, p: str) -> str:
@@ -147,7 +124,7 @@ def _added_files(root: str, snap: dict) -> list[str]:
     sid = snap["snapshot-id"]
     out = []
     _meta, mlist = decode_avro_container(
-        _open_bytes(_resolve(root, snap["manifest-list"])))
+        read_bytes(_resolve(root, snap["manifest-list"])))
     for m in mlist:
         if int(m.get("content") or 0) != 0:
             continue  # delete manifests gate at snapshot level
@@ -155,7 +132,7 @@ def _added_files(root: str, snap: dict) -> list[str]:
                 int(m.get("added_data_files_count") or 0) == 0:
             continue  # carried manifest with nothing added
         _h, entries = decode_avro_container(
-            _open_bytes(_resolve(root, m["manifest_path"])))
+            read_bytes(_resolve(root, m["manifest_path"])))
         for e in entries:
             if int(e.get("status") or 0) != 1:
                 continue
@@ -172,7 +149,7 @@ def _snap_has_deletes(root: str, snap: dict) -> bool:
     from ..sources.avro_lite import decode_avro_container
 
     _h, mlist = decode_avro_container(
-        _open_bytes(_resolve(root, snap["manifest-list"])))
+        read_bytes(_resolve(root, snap["manifest-list"])))
     sid = snap["snapshot-id"]
     return any(int(m.get("content") or 0) == 1
                and m.get("added_snapshot_id") == sid for m in mlist)
@@ -272,17 +249,8 @@ def _make_stream_reader(options):
                 return iter(())
             url, fields_json = partition.payload
             fields = json.loads(fields_json)
-            if "://" not in url or url.startswith("file://"):
-                lp = (url[len("file://"):] if url.startswith("file://")
-                      else url)
-                table = pq.read_table(lp)
-            else:
-                from pyarrow import fs as pafs
-
-                u = ("s3://" + url[len("s3a://"):]
-                     if url.startswith("s3a://") else url)
-                filesystem, pth = pafs.FileSystem.from_uri(u)
-                table = pq.read_table(pth, filesystem=filesystem)
+            filesystem, pth = arrow_fs(url)
+            table = pq.read_table(pth, filesystem=filesystem)
 
             def pa_type(t: str):
                 if t.startswith("decimal"):
